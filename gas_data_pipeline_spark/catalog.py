@@ -34,10 +34,6 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 def _read(spark: SparkSession, path: str) -> DataFrame:
     """Parquet read that normalizes timestamp physical types.
 

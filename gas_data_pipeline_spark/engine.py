@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gas_data_pipeline_spark.functions import make_series_id
@@ -38,6 +38,17 @@ from gas_data_pipeline_spark.pipeline.silver import (
     upsert_observations,
 )
 from gas_data_pipeline_spark.suite.reshape import melt_numeric
+
+# The dims tables' schemas, exactly as ``ingest_batch`` writes them:
+# reads that pass them skip Spark's per-read schema-inference job.
+SERIES_SCHEMA = (
+    "series_id string, dataset_id string, source string, frequency string, "
+    "lookback_days int, is_active boolean, first_seen_at timestamp"
+)
+FIELD_CATALOG_SCHEMA = (
+    "field_name string, inferred_type string, nullable boolean, "
+    "example_value string, first_seen_at timestamp, dataset_id string"
+)
 
 
 class GasDataEngine:
@@ -78,8 +89,7 @@ class GasDataEngine:
         id_cols: list[str],
         time_col: str,
         quality_col: str | None = None,
-        collect_stats: bool = True,
-    ) -> dict[str, int] | None:
+    ) -> dict[str, int]:
         """Full ingest: bronze landing, schema discovery, series
         auto-registration, melt, silver upsert — the reference's
         fetch→raw→discover→register→transform→load chain
@@ -87,11 +97,11 @@ class GasDataEngine:
 
         ``id_cols`` are the entity keys (reference: siteId etc.);
         every OTHER numeric column melts into a series (R1 rule,
-        series_autoregister.py:26-31). Returns row counts per stage —
-        or None with ``collect_stats=False``, which skips the three
-        count-only jobs (batch/observations/new-series); the scheduler
-        loop uses that mode since the counts are observability, not
-        pipeline inputs.
+        series_autoregister.py:26-31). Returns row counts per stage:
+        ``bronze_rows`` landed, ``observations`` upserted and
+        ``new_series`` registered. Each is a ``DataFrame.observe``
+        metric on the write that consumes those rows, so the counts
+        cost no Spark job of their own.
 
         The four sinks (bronze, field catalog, series catalog, silver)
         are data-independent — each derives from ``batch`` alone and
@@ -162,14 +172,21 @@ class GasDataEngine:
                 F.current_timestamp().alias("first_seen_at"),
             )
         )
-        # Count BEFORE the upsert commits: a caller may legally derive
-        # ``batch`` from a read of the very store being upserted.
-        n_obs = observations.count() if collect_stats else 0
+        # The counts ride on the sinks' own writes. The silver upsert
+        # counts the plan it consumes in its first action, before it
+        # commits, so a ``batch`` derived from a read of the very store
+        # being upserted is still counted as it was read.
+        rows = F.count(F.lit(1)).alias("rows")
+        bronze_obs, obs_obs, series_obs = Observation(), Observation(), Observation()
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             # SNK1 — zero-loss raw landing.
             f_bronze = pool.submit(
-                bronze_append, batch, dataset_id, source, self.bronze_path
+                bronze_append,
+                batch.observe(bronze_obs, rows),
+                dataset_id,
+                source,
+                self.bronze_path,
             )
             # A4 — incremental schema discovery on this batch's payloads.
             f_fields = pool.submit(
@@ -182,6 +199,7 @@ class GasDataEngine:
                 series_dim,
                 self.series_path,
                 keys=["series_id"],
+                observation=series_obs,
             )
             # SNK2 — idempotent last-write-wins upsert (atomic
             # manifest-commit variant when configured). The atomic
@@ -195,41 +213,58 @@ class GasDataEngine:
                     upsert_with_retry,
                 )
 
-                f_obs = pool.submit(
-                    upsert_with_retry,
-                    self.spark,
-                    observations,
-                    self.obs_path,
-                )
+                upsert = upsert_with_retry
             else:
-                f_obs = pool.submit(
-                    upsert_observations, self.spark, observations, self.obs_path
-                )
+                upsert = upsert_observations
+            f_obs = pool.submit(
+                upsert, self.spark, observations.observe(obs_obs, rows), self.obs_path
+            )
             f_bronze.result()
             f_fields.result()
             new_series = f_series.result()
             f_obs.result()
 
-        if not collect_stats:
-            return None
+        # Only now that every sink has returned: a failed sink raises
+        # above, before any Observation.get could wait on it.
         return {
-            "bronze_rows": batch.count(),
-            "observations": n_obs,
-            "new_series": new_series.count(),
+            "bronze_rows": bronze_obs.get["rows"],
+            "observations": obs_obs.get["rows"],
+            # No write ran (nothing new), so its observation never fires.
+            "new_series": 0 if new_series is None else series_obs.get["rows"],
         }
 
     def _discover_and_register_fields(self, batch: DataFrame, dataset_id: str) -> None:
-        """A4: profile every column of the batch under the reference's
+        """A4: profile the batch's columns under the reference's
         per-VALUE type lattice null|boolean|integer|float|json|string
         (field_discovery.py:5-16) — a field's type is the comma-joined
         sorted set of its observed value types (field_discovery.py:46),
         so mixed fields report e.g. 'integer,string' and a column
         holding both 'true' and 'false' is 'boolean' — then upsert the
-        field catalog insert-if-absent (SNK3)."""
+        field catalog insert-if-absent (SNK3).
+
+        Only columns the dataset's catalog does not hold yet are
+        profiled: insert-if-absent on (dataset_id, field_name) would
+        drop a registered column's profile row anyway. A re-polled
+        batch with no new column runs one small catalog lookup and no
+        profile job or write."""
         from gas_data_pipeline_spark.functions.profiling import (
             infer_value_type,
             inferred_type_agg,
         )
+
+        registered = set()
+        if os.path.exists(self.fields_path):
+            registered = {
+                r.field_name
+                for r in self.spark.read.schema(FIELD_CATALOG_SCHEMA)
+                .parquet(self.fields_path)
+                .filter(F.col("dataset_id") == dataset_id)
+                .select("field_name")
+                .collect()
+            }
+        columns = [c for c in batch.columns if c not in registered]
+        if not columns:
+            return
 
         # One global aggregate computes every column's profile in a
         # single scan: the per-column lattice set / null flag / example
@@ -248,7 +283,7 @@ class GasDataEngine:
             )
 
         one = batch.agg(
-            *[col_profile(c).alias(f"__p_{i}") for i, c in enumerate(batch.columns)]
+            *[col_profile(c).alias(f"__p_{i}") for i, c in enumerate(columns)]
         )
         profile = one.select(
             F.explode(
@@ -258,7 +293,7 @@ class GasDataEngine:
                             F.lit(c).alias("field_name"),
                             F.col(f"__p_{i}").alias("p"),
                         )
-                        for i, c in enumerate(batch.columns)
+                        for i, c in enumerate(columns)
                     ]
                 )
             ).alias("kv")
@@ -326,7 +361,7 @@ class GasDataEngine:
         one row per series with an ordered ``points`` array (A1)."""
         limit = min(limit, 5000)  # routes.py:20 cap
         obs = self._read_obs(series_id=series_id, start=start, end=end)
-        meta = self.spark.read.parquet(self.series_path)
+        meta = self.spark.read.schema(SERIES_SCHEMA).parquet(self.series_path)
         if series_id is not None:
             obs = obs.filter(F.col("series_id") == series_id)
         if quality_flag is not None:
@@ -574,7 +609,8 @@ class GasDataEngine:
     def discover_fields(self, dataset_id: str) -> DataFrame:
         """The persisted field catalog for a dataset (discovery.py:17-38)."""
         return (
-            self.spark.read.parquet(self.fields_path)
+            self.spark.read.schema(FIELD_CATALOG_SCHEMA)
+            .parquet(self.fields_path)
             .filter(F.col("dataset_id") == dataset_id)
             .orderBy("field_name")
         )

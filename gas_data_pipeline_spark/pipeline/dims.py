@@ -11,30 +11,48 @@ import os
 import shutil
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
 def insert_if_absent(
-    spark: SparkSession, incoming: DataFrame, path: str, keys: list[str]
-) -> DataFrame:
+    spark: SparkSession,
+    incoming: DataFrame,
+    path: str,
+    keys: list[str],
+    observation: Observation | None = None,
+) -> DataFrame | None:
     """SNK3: append only the rows whose key is not already present
     (one left-anti join — never row-at-a-time probes). Returns the rows
-    that were inserted.
+    that were inserted, or None when no key is new: then nothing is
+    written at all (a plain append of zero rows still leaves one empty
+    part file, so a re-polled batch would grow the table by a file per
+    cycle).
 
-    The existing-keys side is NOT hint-broadcast: dimension key sets
-    are usually tiny and AQE broadcasts them automatically under the
-    session's autoBroadcastJoinThreshold, but a forced hint would OOM
-    the driver if series cardinality ever exploded — let the runtime
-    pick shuffle join in that regime.
+    ``observation``, when given, counts the appended rows on the write
+    itself (metric ``rows``) — no separate count job. It is attached
+    only when the write runs, so read it only on a non-None return.
+
+    The existing keys are read under the incoming keys' schema (the
+    table holds what this function appended), so the read runs no
+    schema-inference job. That side is NOT hint-broadcast: dimension
+    key sets are usually tiny and AQE broadcasts them automatically
+    under the session's autoBroadcastJoinThreshold, but a forced hint
+    would OOM the driver if series cardinality ever exploded — let the
+    runtime pick shuffle join in that regime.
     """
-    incoming = incoming.dropDuplicates(keys)
+    new_rows = incoming.dropDuplicates(keys)
     if os.path.exists(path):
-        existing_keys = spark.read.parquet(path).select(*keys)
-        new_rows = incoming.join(existing_keys, keys, "left_anti")
-    else:
-        new_rows = incoming
-    new_rows.write.mode("append").parquet(path)
+        existing_keys = (
+            spark.read.schema(new_rows.select(*keys).schema).parquet(path)
+        )
+        new_rows = new_rows.join(existing_keys, keys, "left_anti")
+        if new_rows.isEmpty():
+            return None
+    written = new_rows
+    if observation is not None:
+        written = written.observe(observation, F.count(F.lit(1)).alias("rows"))
+    written.write.mode("append").parquet(path)
     return new_rows
 
 

@@ -857,7 +857,6 @@ def _hourly_lifecycle(
             source="rest-poll",
             id_cols=["user_id"],
             time_col="obs_hour",
-            collect_stats=False,
         )
         done.append(batch_id)
 

@@ -1,10 +1,9 @@
-"""Round-14 optimization profiler (guide §1): isolate named queries
-with the noop sink, capture ``explain("formatted")``, and time warm
-runs — the measurement loop behind OPTIMIZATION_r15.md.
+"""Round-15 query profiler: isolate named queries with the noop sink,
+capture ``explain("formatted")``, and time warm runs.
 
 Usage::
 
-    python plans/r15/profile.py [--runs N] [--plans SUFFIX] q1 q2 ...
+    python plans/r15/measure.py [--runs N] [--plans SUFFIX] q1 q2 ...
 
 Timings use the bench's own methodology (noop sink, job-labelled,
 gc between runs); plans land in plans/r15/<query>_<SUFFIX>.txt when

@@ -98,6 +98,245 @@ def test_reingest_is_idempotent(engine, spark):
     assert (a.value == b.value).all()
 
 
+def _poll(spark, n_sites, hours, revision=0.0):
+    """A small hourly poll page: ``n_sites`` sites x ``hours`` hours of
+    two metrics, with a null reading every 7th cell and a null
+    timestamp on one row (its readings melt to nothing)."""
+    from datetime import datetime, timedelta
+
+    t0 = datetime(2024, 3, 1)
+    rows = []
+    for s in range(n_sites):
+        for h in range(hours):
+            i = s * hours + h
+            rows.append((
+                s,
+                None if i == 5 else t0 + timedelta(hours=h),
+                None if i % 7 == 0 else float(i) + revision,
+                None if i % 7 == 3 else 2.0 * i + revision,
+            ))
+    return spark.createDataFrame(
+        rows, "site_id int, observed_at timestamp, flow_rate double, energy double"
+    ), rows
+
+
+def _parquet_files(path):
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _job_ids(spark, group=None):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("atomic_silver", [True, False])
+def test_ingest_stats_equal_recount(spark, tmp_path, atomic_silver):
+    """The stats ``ingest_batch`` returns (observe metrics on the sink
+    writes) equal an explicit recount on a first poll with nulls, a
+    repeated poll with revised values, and a poll that adds a site —
+    on both silver stores, whose upserts consume the batch differently."""
+    from gas_data_pipeline_spark.engine import GasDataEngine
+
+    engine = GasDataEngine(spark, str(tmp_path), atomic_silver=atomic_silver)
+
+    def ingest(batch):
+        return engine.ingest_batch(
+            batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at"
+        )
+
+    def n_series():
+        if not os.path.exists(engine.series_path):
+            return 0
+        return spark.read.parquet(engine.series_path).count()
+
+    for n_sites, revision in ((3, 0.0), (3, 0.5), (4, 0.5)):
+        batch, rows = _poll(spark, n_sites, hours=12, revision=revision)
+        before = n_series()
+        stats = ingest(batch)
+        assert stats == {
+            "bronze_rows": len(rows),
+            "observations": sum(
+                v is not None for r in rows if r[1] is not None for v in r[2:]
+            ),
+            "new_series": n_series() - before,
+        }
+        assert stats["bronze_rows"] == batch.count()
+    assert n_series() == 8  # 4 sites x 2 metrics, each registered once
+
+
+def test_ingest_stats_add_no_spark_job(engine, spark, monkeypatch):
+    """Every Spark job of an ingest runs inside one of its four sinks:
+    the stats come from observe metrics on the sink writes, so no count
+    job runs before or after them. Jobs are told apart by job group —
+    the sinks (on pool threads) tag theirs, the calling thread tags
+    anything else."""
+    from gas_data_pipeline_spark import engine as engine_mod
+    from gas_data_pipeline_spark.pipeline import versioned
+
+    sc = spark.sparkContext
+
+    def in_sink_group(fn):
+        def run(*args, **kwargs):
+            sc.setJobGroup("ingest-sink", "ingest sink")
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return run
+
+    for mod, name in (
+        (engine_mod, "bronze_append"),
+        (engine_mod, "insert_if_absent"),
+        (versioned, "upsert_with_retry"),
+    ):
+        monkeypatch.setattr(mod, name, in_sink_group(getattr(mod, name)))
+    monkeypatch.setattr(
+        engine_mod.GasDataEngine,
+        "_discover_and_register_fields",
+        in_sink_group(engine_mod.GasDataEngine._discover_and_register_fields),
+    )
+
+    # A repeated poll and one that adds a site: both write paths of the
+    # series catalog (nothing new / something new) are covered.
+    for n_sites in (2, 2, 3):
+        batch, _ = _poll(spark, n_sites, hours=6)
+        ungrouped = _job_ids(spark)
+        sc.setJobGroup("ingest-caller", "ingest caller")
+        try:
+            stats = engine.ingest_batch(
+                batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at"
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats["bronze_rows"] == n_sites * 6
+        assert _job_ids(spark, "ingest-caller") == set()
+        assert _job_ids(spark, None) - ungrouped == set()
+    assert _job_ids(spark, "ingest-sink")
+
+
+def test_failed_sink_raises_before_stats_are_read(engine, spark, monkeypatch):
+    """A sink that fails before its write runs never fires its
+    observation; ``ingest_batch`` must raise that failure, not wait
+    forever on the observation's metrics."""
+    import threading
+
+    from gas_data_pipeline_spark import engine as engine_mod
+
+    def broken(*args, **kwargs):
+        raise OSError("bronze store unavailable")
+
+    monkeypatch.setattr(engine_mod, "bronze_append", broken)
+    batch, _ = _poll(spark, 2, hours=4)
+    outcome = []
+
+    def run():
+        try:
+            engine.ingest_batch(
+                batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at"
+            )
+        except OSError as e:
+            outcome.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "ingest_batch blocked on a sink that never wrote"
+    assert [str(e) for e in outcome] == ["bronze store unavailable"]
+
+
+def test_repeated_poll_adds_no_dims_files(engine, spark):
+    """A re-polled batch registers nothing new, so neither dims table
+    gains a file (a zero-row append would still leave an empty part
+    file: one per table per hourly cycle)."""
+    batch, _ = _poll(spark, 3, hours=6)
+    args = ("GAS_QUALITY", "national_gas", ["site_id"], "observed_at")
+    engine.ingest_batch(batch, *args)
+    series_files = _parquet_files(engine.series_path)
+    field_files = _parquet_files(engine.fields_path)
+    assert series_files and field_files
+
+    stats = engine.ingest_batch(batch, *args)
+    assert stats["new_series"] == 0
+    assert _parquet_files(engine.series_path) == series_files
+    assert _parquet_files(engine.fields_path) == field_files
+
+
+def test_dims_schemas_match_what_ingest_writes(engine, spark):
+    """The declared dims schemas (used to read the tables without a
+    schema-inference job) are exactly what ``ingest_batch`` writes, and
+    building a ``get_data`` frame runs no Spark job."""
+    from pyspark.sql.types import StructType
+
+    from gas_data_pipeline_spark.engine import FIELD_CATALOG_SCHEMA, SERIES_SCHEMA
+
+    batch, _ = _poll(spark, 2, hours=6)
+    engine.ingest_batch(
+        batch, "GAS_QUALITY", "national_gas", ["site_id"], "observed_at"
+    )
+    for path, ddl in (
+        (engine.series_path, SERIES_SCHEMA),
+        (engine.fields_path, FIELD_CATALOG_SCHEMA),
+    ):
+        written = spark.read.parquet(path).schema
+        assert [(f.name, f.dataType) for f in written] == [
+            (f.name, f.dataType) for f in StructType.fromDDL(ddl)
+        ]
+    before = _job_ids(spark)
+    df = engine.get_data(dataset_id="GAS_QUALITY", limit=5)
+    assert _job_ids(spark) - before == set()
+    assert df.count() == 5
+
+
+def test_discovery_skips_registered_columns(engine, spark, monkeypatch):
+    """Discovery profiles only the columns the dataset's field catalog
+    does not hold yet: a batch with the same columns runs no profile
+    job and leaves the catalog unchanged; a batch with one new column
+    profiles and registers only that column, with its inferred type."""
+    from gas_data_pipeline_spark import engine as engine_mod
+
+    batch, _ = _poll(spark, 2, hours=6)
+    engine._discover_and_register_fields(batch, "D")
+    catalog = engine.discover_fields("D").toPandas()
+    files = _parquet_files(engine.fields_path)
+    assert sorted(catalog.field_name) == sorted(batch.columns)
+
+    profiled = []
+    real_insert = engine_mod.insert_if_absent
+
+    def spy(spark_, incoming, path, keys, **kwargs):
+        profiled.append(sorted(r.field_name for r in incoming.collect()))
+        return real_insert(spark_, incoming, path, keys, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "insert_if_absent", spy)
+
+    # Same columns (other values): one catalog lookup, no profile job.
+    repeat, _ = _poll(spark, 3, hours=4, revision=0.5)
+    before = _job_ids(spark)
+    engine._discover_and_register_fields(repeat, "D")
+    assert len(_job_ids(spark) - before) <= 1
+    assert profiled == []
+    assert _parquet_files(engine.fields_path) == files
+    assert engine.discover_fields("D").toPandas().equals(catalog)
+
+    # One new column: only it is profiled and registered.
+    wider = repeat.withColumn(
+        "is_peak", (F.col("site_id") % 2 == 0).cast("string")
+    )
+    engine._discover_and_register_fields(wider, "D")
+    assert profiled == [["is_peak"]]
+    after = engine.discover_fields("D").toPandas().set_index("field_name")
+    assert sorted(after.index) == sorted(wider.columns)
+    assert after.loc["is_peak"].inferred_type == "boolean"
+    assert not after.loc["is_peak"].nullable
+    old = catalog.set_index("field_name")
+    assert after.drop(index="is_peak").sort_index().equals(old.sort_index())
+    # Another dataset's catalog is separate: all its columns register.
+    engine._discover_and_register_fields(batch, "E")
+    assert sorted(engine.discover_fields("E").toPandas().field_name) == sorted(
+        batch.columns
+    )
+
+
 def test_series_id_and_history(engine, spark):
     batch = _wide_batch(spark)
     engine.ingest_batch(
